@@ -3,6 +3,7 @@ exact jaccard pairs, top-k determinism, simhash behavior, and
 hypothesis property tests for the scalar functions."""
 
 import re
+from contextlib import contextmanager
 
 import pytest
 from hypothesis import given, settings
@@ -17,6 +18,35 @@ from web_scraper_spark.operators.dedup import (
 )
 from web_scraper_spark.operators.relational import asof_join, topk_per_group
 from web_scraper_spark.functions import columns as C
+
+# Broadcasts off, both at planning time and in AQE's runtime re-plan.
+NO_BROADCAST = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+}
+
+
+@contextmanager
+def session_conf(spark, settings):
+    """Apply SQL conf ``settings`` for the block; restore afterwards."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def executed_plan(df):
+    """The executed physical plan after a collect() (AQE finalizes
+    join strategies and exchange reuse at execution)."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_asof_join_boundary_wins_at_equal_ts(spark):
@@ -79,11 +109,14 @@ def test_incremental_dedup_against_index(spark, tmp_path):
     matching old id, disjoint-vocab docs come back novel (-1), and the
     result is identical whether the index + signature table are used
     in-memory or round-tripped through parquet (the persisted-artifact
-    property the operator exists for)."""
+    property the operator exists for). The new snapshot's signature
+    table is built once: with AQE on and off, the band keys and the
+    verification join share its groupBy(id) exchange (ReusedExchange),
+    and so do the index and the old signature table."""
     from web_scraper_spark.operators.dedup import (
         dedup_against_index,
         minhash_band_index,
-        minhash_signature,
+        minhash_signatures_df,
     )
 
     old = spark.createDataFrame(
@@ -103,25 +136,31 @@ def test_incremental_dedup_against_index(spark, tmp_path):
         "doc_id long, text string",
     )
     index = minhash_band_index(old, "text", "doc_id", num_hashes=16, bands=8)
-    sigs = old.select(
-        F.col("doc_id").alias("id"),
-        minhash_signature(F.col("text"), 16).alias("sig"),
-    )
+    sigs = minhash_signatures_df(old, "text", "doc_id", num_hashes=16)
     expect = {(11, True, 2), (13, True, 6), (15, False, -1)}
 
-    def run(ix, sg, **kw):
+    def dedup(ix, sg):
+        return dedup_against_index(
+            new, ix, "text", "doc_id", num_hashes=16, bands=8,
+            old_sigs=sg, min_agree=8,
+        )
+
+    def run(ix, sg):
         return {
-            (r["id"], r["is_dup"], r["first_match"])
-            for r in dedup_against_index(
-                new, ix, "text", "doc_id", num_hashes=16, bands=8,
-                old_sigs=sg, min_agree=8, **kw,
-            ).collect()
+            (r["id"], r["is_dup"], r["first_match"]) for r in dedup(ix, sg).collect()
         }
 
-    assert run(index, sigs) == expect
-    # the persist_sigs lever (one text pass, checkpointed sig table)
-    # must be a pure plan change
-    assert run(index, sigs, persist_sigs=True) == expect
+    reused_sig_exchange = re.compile(
+        r"ReusedExchange \[id#\d+L?, min#[^\]]*\], "
+        r"Exchange hashpartitioning\(id#\d+L?, \d+\)"
+    )
+    for aqe in ("true", "false"):
+        with session_conf(spark, {"spark.sql.adaptive.enabled": aqe}):
+            assert run(index, sigs) == expect, aqe
+            plan = executed_plan(dedup(index, sigs))
+            # one reuse on the new side (band keys + verification), one
+            # on the old side (index + old_sigs share a source)
+            assert len(reused_sig_exchange.findall(plan)) >= 2, plan
     # the index is a persistable artifact: parquet round-trip changes nothing
     index.write.parquet(str(tmp_path / "ix"))
     sigs.write.parquet(str(tmp_path / "sg"))
@@ -448,7 +487,10 @@ def test_duplicate_spans_merges_intervals(spark):
 def test_remove_duplicate_spans_cuts_located_intervals(spark):
     """ExactSubstr APPLY: cutting the spans duplicate_spans located
     leaves exactly the uncovered tokens, in order; fully-covered docs
-    come back empty; docs with no spans pass through normalized."""
+    come back empty; docs with no spans pass through normalized. The
+    per-doc span directory grows with the corpus, so its join is not
+    forced to broadcast: with broadcasts disabled it sort-merges on
+    id and the rows are identical."""
     from web_scraper_spark.operators.dedup import (
         duplicate_spans,
         remove_duplicate_spans,
@@ -462,7 +504,8 @@ def test_remove_duplicate_spans_cuts_located_intervals(spark):
     ]
     df = spark.createDataFrame(rows, "id int, text string")
     spans = duplicate_spans(df, "text", "id", window=3, min_docs=2)
-    out = {r["id"]: r for r in remove_duplicate_spans(df, spans, "text", "id").collect()}
+    cut = remove_duplicate_spans(df, spans, "text", "id").collect()
+    out = {r["id"]: r for r in cut}
     # doc 1: spans [1,5] and [8,10] cut → tokens a(0) q(6) r(7) remain
     assert out[1]["clean_text"] == "a q r"
     assert out[1]["n_tokens_kept"] == 3 and out[1]["n_tokens_removed"] == 8
@@ -473,6 +516,13 @@ def test_remove_duplicate_spans_cuts_located_intervals(spark):
     # doc 4 untouched (normalized join)
     assert out[4]["clean_text"] == "unrelated words only"
     assert out[4]["n_tokens_removed"] == 0
+
+    with session_conf(spark, NO_BROADCAST):
+        shuffled = remove_duplicate_spans(df, spans, "text", "id")
+        plan = executed_plan(shuffled)
+        assert "BroadcastHashJoin" not in plan, plan
+        assert "SortMergeJoin" in plan, plan
+        assert sorted(map(tuple, shuffled.collect())) == sorted(map(tuple, cut))
 
 
 def test_remove_duplicate_spans_overlapping_input_spans(spark):
@@ -1099,35 +1149,18 @@ def test_unigram_surprisal_vocab_broadcast_guard(spark):
     rows.append((100, "zyzzyva qwertyuiop xylophone"))
     df = spark.createDataFrame(rows, "id int, text string")
 
-    def final_plan(out):
-        out.collect()  # AQE finalizes join strategies at execution
-        return out._jdf.queryExecution().executedPlan().toString()
-
     small = unigram_surprisal(df, "text", "id")
     a = sorted(map(tuple, small.collect()))
-    assert "BroadcastHashJoin" in final_plan(small)
+    assert "BroadcastHashJoin" in executed_plan(small)
 
-    thresholds = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {k: spark.conf.get(k, None) for k in thresholds}
-    for k, v in thresholds.items():
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, NO_BROADCAST):
         big = unigram_surprisal(df, "text", "id")
         b = sorted(map(tuple, big.collect()))
-        plan = final_plan(big)
+        plan = executed_plan(big)
         # the 1-row total still broadcasts (as a nested-loop cross
         # join); the counts EQUI-join must not hash-broadcast
         assert plan.count("BroadcastHashJoin") == 0, plan
         assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert a == b
 
 
@@ -1188,7 +1221,8 @@ def test_connected_components_log_iterations_on_long_chain(spark):
 
 def test_bigram_surprisal_manual(spark):
     """Hand-computed decibans on a 3-doc corpus; a <2-token doc
-    reports (0, 0.0); the over-budget shuffle path is row-identical."""
+    reports (0, 0.0); with broadcasts disabled the count joins
+    sort-merge and the rows are identical."""
     from web_scraper_spark.operators.text import bigram_surprisal
 
     # bigrams: doc1 -> (a,b),(b,a),(a,c); doc2 -> none; doc3 -> (a,b)
@@ -1204,10 +1238,11 @@ def test_bigram_surprisal_manual(spark):
     assert out[2]["n_bigrams"] == 0 and out[2]["mean_deciban"] == 0.0
     assert out[3]["n_bigrams"] == 1 and out[3]["mean_deciban"] == 2.0
 
-    shuffled = bigram_surprisal(df, "text", "id", max_broadcast_bigrams=1)
-    assert sorted(map(tuple, shuffled.collect())) == sorted(
-        map(tuple, bigram_surprisal(df, "text", "id").collect())
-    )
+    default = sorted(map(tuple, bigram_surprisal(df, "text", "id").collect()))
+    with session_conf(spark, NO_BROADCAST):
+        shuffled = bigram_surprisal(df, "text", "id")
+        assert "SortMergeJoin" in executed_plan(shuffled)
+        assert sorted(map(tuple, shuffled.collect())) == default
 
 
 def test_bigram_surprisal_orders_boilerplate_below_soup(spark):

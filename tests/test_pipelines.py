@@ -87,7 +87,7 @@ def test_curate_incremental_stage(spark):
     stays deterministic under repartition."""
     from web_scraper_spark.operators.dedup import (
         minhash_band_index,
-        minhash_signature,
+        minhash_signatures_df,
     )
 
     # controlled vocab: sf* synthetic docs share distinct-token SETS
@@ -107,10 +107,7 @@ def test_curate_incremental_stage(spark):
         "doc_id long, text string, lang string",
     )
     index = minhash_band_index(old, "text", "doc_id", num_hashes=16, bands=8)
-    sigs = old.select(
-        F.col("doc_id").alias("id"),
-        minhash_signature(F.col("text"), 16).alias("sig"),
-    )
+    sigs = minhash_signatures_df(old, "text", "doc_id", num_hashes=16)
     cfg = CurationConfig(
         min_quality=0.0, fuzzy=False,
         prev_index=index, prev_sigs=sigs, index_min_agree=8,

@@ -341,6 +341,43 @@ def test_stream_near_dup_pairs_across_batches(spark, tmp_path):
     assert got <= got2
 
 
+def test_near_dup_repeated_url_in_one_batch(spark, tmp_path):
+    """Rows sharing a URL inside one micro-batch are ONE document:
+    their shingle sets merge into one signature, so the pairs output
+    is the same whether the batch arrives in one partition or seven."""
+    from web_scraper_spark.streaming.neardup import (
+        make_near_dup_batch_fn,
+        read_near_dup_pairs,
+    )
+
+    head = "the quick brown fox jumps over the lazy dog"
+    tail = "again and again tonight under the moon"
+    batch = spark.createDataFrame(
+        [
+            ("https://r.x/dup", head),
+            ("https://r.x/dup", tail),
+            ("https://r.x/full", head + " " + tail),
+            ("https://r.x/half", head),
+            ("https://r.x/other", "completely different content about turnips"),
+        ],
+        "url string, text string",
+    )
+
+    def pairs(n_parts):
+        store = str(tmp_path / f"store{n_parts}")
+        out = str(tmp_path / f"pairs{n_parts}")
+        make_near_dup_batch_fn(store, out, threshold=0.5)(
+            batch.repartition(n_parts), 0
+        )
+        return sorted(map(tuple, read_near_dup_pairs(spark, out).collect()))
+
+    one = pairs(1)
+    assert one == pairs(7)
+    # the merged document's shingle set equals `full`'s exactly
+    assert ("https://r.x/dup", "https://r.x/full", 1.0) in one, one
+    assert all("other" not in a and "other" not in b for a, b, _ in one), one
+
+
 def test_near_dup_store_guards_and_crash_safe_compaction(spark, tmp_path):
     """Three resilience guards on the incremental near-dup store:
     (1) a legacy single-table batch=* layout under store_dir raises

@@ -5,6 +5,13 @@ Judge-facing evidence that the plans are the ones you'd want at
 100 TB: pushed filters, pruned scan schemas, broadcast joins where
 dims are small, single exchanges per logical operation, and Arrow
 UDF inputs pruned to [url, html].
+
+Usage: python tools/dump_plans.py                  # SHOW list → PLANS.md
+       python tools/dump_plans.py q102_incremental_dedup ...
+                                  # each query's full explain("formatted")
+                                  # to stdout
+
+Input is ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.01).
 """
 
 from __future__ import annotations
@@ -70,7 +77,14 @@ SHOW = [
 ]
 
 
-def main() -> None:
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def main(names: list[str]) -> None:
     from web_scraper_spark.plans.queries import QUERIES
     from web_scraper_spark.session import get_spark
 
@@ -87,6 +101,13 @@ def main() -> None:
     spark = get_spark("plans", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
 
+    if names:
+        for name in names:
+            print(f"# {name} — explain('formatted') at {sf_dir}")
+            print(_explain(QUERIES[name](spark, sf_dir)))
+        spark.stop()
+        return
+
     out = [
         "# PLANS.md — physical-plan evidence (generated by tools/dump_plans.py)\n",
         f"Input: {sf_dir}. Things to check per plan: `PushedFilters`,",
@@ -94,13 +115,8 @@ def main() -> None:
         "exchange count, and `WholeStageCodegen` spans.\n",
     ]
     for name, why in SHOW:
-        df = QUERIES[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
         # keep the operator tree; drop the verbose per-node detail
-        tree = plan.split("\n\n\n")[0]
+        tree = _explain(QUERIES[name](spark, sf_dir)).split("\n\n\n")[0]
         out.append(f"\n## {name} — {why}\n\n```\n{tree}\n```\n")
     spark.stop()
     with open("PLANS.md", "w") as fh:
@@ -109,4 +125,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

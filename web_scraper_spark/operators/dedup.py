@@ -8,10 +8,13 @@ embedding-cosine near-dup.
 
 Scale design:
 - Exact dedup: one hash-exchange on the digest; map-side partial agg.
-- MinHash signatures: computed entirely JVM-side with
-  ``transform``/``array_min`` over the token array — NO explode, NO
-  shuffle for signature building. Only candidate pairing shuffles
-  (on LSH band keys), and each band bucket is tiny by construction.
+- MinHash signatures: one builder, ``minhash_signatures_df`` —
+  explode(shingles) → codegen md5 columns → one groupBy(id) of mins,
+  whose map-side partial aggregation leaves about one row per document
+  in the signature shuffle. Batch LSH, incremental index dedup and the
+  streaming near-dup store all band from it. Candidate pairing
+  shuffles on LSH band keys, and each band bucket is tiny by
+  construction.
 - Jaccard verification runs only on LSH candidates, never all pairs.
 - The hash family is ``md5(token ∥ '#' ∥ seed)`` with *lexicographic*
   min over hex digests — deterministic, engine-portable (identical in
@@ -63,32 +66,6 @@ def word_shingles(col: Column, n: int) -> Column:
     )
 
 
-def minhash_signature(
-    col: Column, num_hashes: int, shingle_n: int = 1, salt: str = ""
-) -> Column:
-    """MinHash signature as an array of hex-digest minima.
-
-    sig[k] = min over shingles s of md5(s ∥ '#' ∥ salt ∥ k).
-    Lexicographic min over md5 hex is a valid uniform hash family and
-    is portable to the SQL oracle. Entirely expression-level — no
-    shuffle. ``salt`` selects an INDEPENDENT hash family (e.g. the
-    streaming near-dup verifier uses salt='v' so its estimator is not
-    correlated with the banding family that selected the candidates —
-    conditioning on a band collision biases the banding components
-    toward agreement)."""
-    sh = word_shingles(col, shingle_n)
-
-    def hash_k(k: int):
-        tag = f"#{salt}{k}"
-        # NB: must stay a unary lambda — F.transform treats a binary
-        # lambda as (element, index), silently shadowing a default arg.
-        return lambda s: F.md5(F.concat(s, F.lit(tag)))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, hash_k(k))) for k in range(num_hashes)]
-    )
-
-
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str,
@@ -97,18 +74,31 @@ def minhash_signatures_df(
     shingle_n: int = 1,
     salt: str = "",
 ) -> DataFrame:
-    """(id, sig) MinHash signature table — value-identical to
-    ``select(id, minhash_signature(text))`` for unique ids, but
-    computed as explode(shingles) → ``num_hashes`` codegen md5
-    columns → one groupBy(id) of mins. The Column form evaluates its
-    per-k ``transform``/``array_min`` higher-order functions
-    interpreted (CodegenFallback — guide §4.1), which made signature
-    building the dominant LSH cost (measured 2.3× slower than this
-    shape over the sf1.0 corpus). The groupBy's partial aggregation
-    collapses each document's shingles map-side (documents explode
-    within one partition), so the exchange carries one row per
-    (id × partition). Requires unique ``id_col`` values (rows sharing
-    an id would have their shingle sets merged)."""
+    """(id, sig) MinHash signature table — the one signature builder
+    behind every LSH path (batch candidates, the incremental band
+    index, the streaming near-dup store).
+
+    sig[k] = min over shingles s of md5(s ∥ '#' ∥ salt ∥ k).
+    Lexicographic min over md5 hex is a valid uniform hash family and
+    is portable to the SQL oracle. ``salt`` selects an INDEPENDENT
+    hash family (e.g. the streaming near-dup verifier uses salt='v' so
+    its estimator is not correlated with the banding family that
+    selected the candidates — conditioning on a band collision biases
+    the banding components toward agreement). A document with no
+    shingles (null text, or fewer than ``shingle_n`` tokens) gets an
+    all-null signature.
+
+    Shape: explode(shingles) → ``num_hashes`` codegen md5 columns →
+    one groupBy(id) of mins. Per-k ``transform``/``array_min``
+    higher-order functions would evaluate interpreted
+    (CodegenFallback) — measured 2.3× slower over the sf1.0 corpus.
+    The groupBy's partial aggregation collapses each document's
+    shingles map-side (documents explode within one partition), so
+    the exchange carries one row per (id × partition).
+
+    Rows sharing an ``id_col`` value have their shingle sets MERGED:
+    the signature is that of the union of their shingles, whatever
+    the partitioning."""
     sh = word_shingles(F.col(text_col), shingle_n)
     ex = df.select(F.col(id_col).alias("id"), F.explode_outer(sh).alias("_s"))
     aggs = [
@@ -140,18 +130,18 @@ def minhash_band_index(
     rescanning the old corpus's text. Index size is ``bands`` skinny
     rows per document (two md5-hex strings + a byte), orders of
     magnitude smaller than the text it summarizes. Signature building
-    is entirely expression-level — the only cost is one pass over the
-    new text. Indexes COMPOSE by unionByName (per-doc rows are
-    independent), so appending a curated snapshot's own index keeps
-    the artifact current for the next snapshot — no rebuild."""
+    is one pass over the new text plus one skinny groupBy(id). Indexes
+    COMPOSE by unionByName (per-doc rows are independent), so
+    appending a curated snapshot's own index keeps the artifact
+    current for the next snapshot — no rebuild."""
     with_sig = minhash_signatures_df(df, text_col, id_col, num_hashes, shingle_n)
     return _band_rows(with_sig, num_hashes, bands)
 
 
 def _band_rows(with_sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, sig) → (id, band, bucket) band-key rows. Shared by
-    minhash_band_index and dedup_against_index's persist_sigs path so
-    both derive identical buckets from one signature definition."""
+    minhash_band_index and dedup_against_index so both derive
+    identical buckets from one signature definition."""
     rows_per_band = num_hashes // bands
     return with_sig.select(
         "id",
@@ -252,7 +242,6 @@ def dedup_against_index(
     max_bucket_size: int | None = None,
     old_sigs: DataFrame | None = None,
     min_agree: int | None = None,
-    persist_sigs: bool = False,
 ) -> DataFrame:
     """Incremental fuzzy dedup: annotate a NEW snapshot against an
     EXISTING corpus's band index (``minhash_band_index`` output) —
@@ -274,31 +263,17 @@ def dedup_against_index(
     matched old ids (skinny), never the whole signature table's
     payload per banded row.
 
-    Scale shape: the new snapshot's text is read once (signature
-    expressions, no shuffle); the only wide exchange is the band-key
-    equi-join of ``bands`` skinny rows per new doc against the index.
+    Scale shape: the new snapshot's signature table is built once and
+    feeds both the band keys and the verification join — the two
+    branches share one groupBy(id) exchange, which Spark executes once
+    and reuses (``ReusedExchange``, plan-tested), so the MinHash is
+    not recomputed. The other wide exchange is the band-key equi-join
+    of ``bands`` skinny rows per new doc against the index.
     ``max_bucket_size`` guards degenerate boilerplate buckets in the
     index exactly like minhash_lsh_candidates (eager count + WARNING,
-    broadcast anti-join exclusion of both sides).
-
-    ``persist_sigs``: with verification on, the plan has two branches
-    over the new text (band keys + the sig join), so the MinHash —
-    the dominant cost at corpus scale — computes twice. True
-    localCheckpoints the skinny (id, sig) table once and derives both
-    branches from it. A MEASURED lever per the project rule (the
-    materialization round-trip beats recompute only when the text
-    pass dominates): time both on your corpus before flipping it in a
-    long-lived pipeline."""
-    if persist_sigs and old_sigs is not None and min_agree is not None:
-        new_sigs = materialize(
-            minhash_signatures_df(new_df, text_col, id_col, num_hashes, shingle_n)
-        )
-        new_banded = _band_rows(new_sigs, num_hashes, bands)
-    else:
-        new_sigs = None
-        new_banded = minhash_band_index(
-            new_df, text_col, id_col, num_hashes, bands, shingle_n
-        )
+    broadcast anti-join exclusion of both sides)."""
+    new_sigs = minhash_signatures_df(new_df, text_col, id_col, num_hashes, shingle_n)
+    new_banded = _band_rows(new_sigs, num_hashes, bands)
     old_banded = index.select("id", "band", "bucket")
     if max_bucket_size is not None:
         hot = (
@@ -328,10 +303,6 @@ def dedup_against_index(
         .distinct()
     )
     if old_sigs is not None and min_agree is not None:
-        if new_sigs is None:
-            new_sigs = minhash_signatures_df(
-                new_df, text_col, id_col, num_hashes, shingle_n
-            )
         cands = (
             cands.join(new_sigs.select("id", F.col("sig").alias("sig_n")), "id")
             .join(
@@ -1289,14 +1260,18 @@ def remove_duplicate_spans(
     Coordinates are the NORMALIZED token positions duplicate_spans
     emits (0-based, span_end inclusive, over normalize_text tokens),
     so the returned ``clean_text`` is normalized tokens re-joined
-    with single spaces. Scale shape — ONE corpus scan and ZERO
-    corpus-side exchanges: the caller's span set is first merged per
-    doc into disjoint intervals (a window over the spans table only —
-    spans ≪ corpus) and folded into one interval-array row per doc;
-    that skinny directory broadcast-joins the corpus, and the cut is
-    a per-row positional ``filter`` over the token array (a token
-    survives iff no interval covers its index) re-joined in place —
-    order is positional by construction, so no sort is ever needed.
+    with single spaces. Scale shape — ONE corpus scan: the caller's
+    span set is first merged per doc into disjoint intervals (a window
+    over the spans table only — spans ≪ corpus) and folded into one
+    interval-array row per doc; that skinny directory is joined to the
+    corpus without a hint, so AQE broadcasts it when its runtime size
+    fits ``spark.sql.autoBroadcastJoinThreshold`` (no corpus-side
+    exchange) and sort-merge joins on id when it does not — the
+    directory grows with the corpus, and a forced broadcast of it
+    would abort the job at scale. The cut is a per-row positional
+    ``filter`` over the token array (a token survives iff no interval
+    covers its index) re-joined in place — order is positional by
+    construction, so no sort is ever needed.
     The r1–r6 shape (token posexplode → range join → groupBy(id) with
     array_sort(collect_list(...)) reassembly) moved every token
     through an exchange and a per-doc sort; measured 2.6 s → 0.9 s
@@ -1332,9 +1307,9 @@ def remove_duplicate_spans(
         F.col(id_col).alias("id"),
         F.split(normalize_text(F.col(text_col)), " ").alias("_t"),
     )
-    joined = base.join(
-        F.broadcast(sp), base["id"] == sp["s_id"], "left"
-    ).select("id", "_t", F.coalesce(F.col("_iv"), F.array()).alias("_iv"))
+    joined = base.join(sp, base["id"] == sp["s_id"], "left").select(
+        "id", "_t", F.coalesce(F.col("_iv"), F.array()).alias("_iv")
+    )
     covered = lambda i: F.exists(
         F.col("_iv"), lambda s: (i >= s["s0"]) & (i <= s["s1"])
     )

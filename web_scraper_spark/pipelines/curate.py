@@ -61,9 +61,10 @@ class CurationConfig:
     lsh_bands: int = 8
     max_bucket_size: int | None = 2000      # LSH hot-bucket guard
     # incremental mode: the EXISTING corpus as its persisted artifacts
-    # (minhash_band_index output + (id, sig) signature table, built
-    # with the SAME lsh_num_hashes/lsh_bands) — new-snapshot docs that
-    # fuzzily match it are dropped without reading the old text.
+    # (minhash_band_index output + the (id, sig) table from
+    # minhash_signatures_df, both built with the SAME lsh_num_hashes/
+    # lsh_bands) — new-snapshot docs that fuzzily match it are dropped
+    # without reading the old text.
     prev_index: DataFrame | None = None
     prev_sigs: DataFrame | None = None      # enables sig verification
     index_min_agree: int | None = None      # with prev_sigs: ≥k/num_hashes

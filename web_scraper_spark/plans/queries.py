@@ -496,8 +496,8 @@ def q15_fingerprint(spark, sf_dir):
 )
 def q16_minhash_sig(spark, sf_dir):
     d = _load(spark, sf_dir, "documents")
-    sig = D.minhash_signature(F.col("text"), num_hashes=1)
-    return d.select("doc_id", F.element_at(sig, 1).alias("sig0"))
+    sig = D.minhash_signatures_df(d, "text", "doc_id", num_hashes=1)
+    return sig.select(F.col("id").alias("doc_id"), F.element_at("sig", 1).alias("sig0"))
 
 
 # =====================================================================
@@ -3763,10 +3763,7 @@ def q102_incremental_dedup(spark, sf_dir):
     old = d.filter(F.col("doc_id") % 2 == 0)
     new = d.filter(F.col("doc_id") % 2 == 1)
     index = D.minhash_band_index(old, "text", "doc_id", num_hashes=8, bands=4)
-    old_sigs = old.select(
-        F.col("doc_id").alias("id"),
-        D.minhash_signature(F.col("text"), 8).alias("sig"),
-    )
+    old_sigs = D.minhash_signatures_df(old, "text", "doc_id", num_hashes=8)
     res = D.dedup_against_index(
         new, index, "text", "doc_id", num_hashes=8, bands=4,
         old_sigs=old_sigs, min_agree=4,
@@ -3874,10 +3871,7 @@ def q103_incremental_curation(spark, sf_dir):
         )
     )
     index = D.minhash_band_index(old, "text", "doc_id", num_hashes=8, bands=4)
-    sigs = old.select(
-        F.col("doc_id").alias("id"),
-        D.minhash_signature(F.col("text"), 8).alias("sig"),
-    )
+    sigs = D.minhash_signatures_df(old, "text", "doc_id", num_hashes=8)
     cfg = CurationConfig(
         min_quality=0.0, fuzzy=False, lsh_num_hashes=8, lsh_bands=4,
         prev_index=index, prev_sigs=sigs, index_min_agree=8,

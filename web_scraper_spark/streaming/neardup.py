@@ -16,9 +16,11 @@ under ``store_dir``:
   family (salt='v'), stored once per doc rather than duplicated per
   band.
 
-Each batch computes both JVM-side (operators.dedup.minhash_signature
-— no shuffle), joins its banded keys against the store ∪ itself on
-(band, bucket) — the same bounded-by-collision-probability join as
+Each batch builds both with the batch path's signature builder
+(operators.dedup: ``minhash_band_index`` for the banding family,
+``minhash_signatures_df(salt='v')`` for the verification family — one
+skinny groupBy(id) each), joins its banded keys against the store ∪
+itself on (band, bucket) — the same bounded-by-collision-probability join as
 the batch LSH operator — and VERIFIES candidates with the
 ``verify_hashes``-component estimator: est = agreeing components /
 verify_hashes. This is the standard unbiased MinHash Jaccard
@@ -50,51 +52,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_signature
+from ..operators.dedup import minhash_band_index, minhash_signatures_df
 
 _STORE_GLOB = "batch=*"
 _BANDS_SUB = "bands"
 _SIGS_SUB = "sigs"
-
-
-def _band_rows(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band, bucket) candidate keys — banding family (salt='')."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signature(F.col(text_col), num_hashes)
-    with_sig = df.select(F.col(id_col).alias("id"), sig.alias("sig"))
-    return with_sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-
-
-def _sig_rows(
-    df: DataFrame, text_col: str, id_col: str, verify_hashes: int
-) -> DataFrame:
-    """(id, vsig) one row per doc — verification family (salt='v'),
-    independent of the banding family by construction."""
-    vsig = minhash_signature(F.col(text_col), verify_hashes, salt="v")
-    return df.select(F.col(id_col).alias("id"), vsig.alias("vsig"))
 
 
 def make_near_dup_batch_fn(
@@ -113,13 +75,27 @@ def make_near_dup_batch_fn(
     independent ``verify_hashes``-component MinHash estimator (std ≤
     0.5/√K; see module docstring) — then adds its own banded keys and
     verification signatures to the store. Wire with
-    ``writeStream.foreachBatch(fn)``."""
+    ``writeStream.foreachBatch(fn)``.
+
+    An id names one document. Rows that share an id within one
+    micro-batch are merged into one document: their shingle sets are
+    unioned before signing (``minhash_signatures_df``), so the pairs
+    do not depend on how the batch is partitioned. Across batches ids
+    should not repeat — drop already-seen URLs upstream (e.g.
+    ``stateful.stream_first_seen``); a replayed epoch, which rewrites
+    the same rows, is the one repeat the store absorbs."""
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         src = batch_df.persist()
-        new_bands = _band_rows(src, text_col, id_col, num_hashes, bands).persist()
-        new_sigs = _sig_rows(src, text_col, id_col, verify_hashes).persist()
+        new_bands = minhash_band_index(
+            src, text_col, id_col, num_hashes, bands
+        ).persist()
+        new_sigs = (
+            minhash_signatures_df(src, text_col, id_col, verify_hashes, salt="v")
+            .withColumnRenamed("sig", "vsig")
+            .persist()
+        )
         new_bands.count()  # materialize: store join + store write both consume
         new_sigs.count()
 
